@@ -11,9 +11,11 @@ null-safe diff join in the same batch — and the storage layer
 (sources.store) persists new state + emits change events. Concurrency
 collapses to per-partition single-writer batch semantics (SURVEY §3.2).
 
-Scale notes: the state/updates join is an equi-join on the key (hash
-shuffle both sides or broadcast for small update batches); statuses are
-a projection of that same join — no second pass over state.
+Scale notes: key-list operators (increment, the patch batches) enter
+the key list into the plan as literals (``isin``, literal maps), so
+their targeted rows are a map-only filter over the state, bounded by
+the request. ``set_treasures`` is the one frame-keyed operator: an
+equi-join on the key; statuses are a projection of that same join.
 """
 
 from __future__ import annotations
@@ -57,12 +59,33 @@ def set_treasures(
     b = base.select(key_col, *value_cols).alias("b")
     u = updates.select(key_col, *value_cols).alias("u")
     j = b.join(u, F.col(f"b.{key_col}") == F.col(f"u.{key_col}"), "full_outer")
+    key = F.coalesce(F.col(f"b.{key_col}"), F.col(f"u.{key_col}")).alias(key_col)
+    return j.select(key, *set_columns(
+        value_cols,
+        lambda c: F.col(f"b.{c}"),
+        lambda c: F.col(f"u.{c}"),
+        F.col(f"b.{key_col}").isNotNull(),
+        F.col(f"u.{key_col}").isNotNull(),
+        create_if_not_exist,
+        overwrite,
+    ))
 
-    in_base = F.col(f"b.{key_col}").isNotNull()
-    in_upd = F.col(f"u.{key_col}").isNotNull()
+
+def set_columns(
+    value_cols: Sequence[str],
+    old,
+    new,
+    in_base: Column,
+    in_upd: Column,
+    create_if_not_exist: bool = True,
+    overwrite: bool = True,
+) -> list[Column]:
+    """The Set projection over a row that pairs a base side with an
+    updates side: the post-set value columns plus ``set_status``.
+    ``old(c)``/``new(c)`` give each side's column ``c``."""
     same = F.lit(True)
     for c in value_cols:
-        same = same & F.col(f"b.{c}").eqNullSafe(F.col(f"u.{c}"))
+        same = same & old(c).eqNullSafe(new(c))
 
     take_update = (
         (in_upd & ~in_base & F.lit(create_if_not_exist))
@@ -76,16 +99,9 @@ def set_treasures(
         .when(same, F.lit(STATUS_NOTHING_CHANGED))
         .otherwise(F.lit(STATUS_UPDATED))
     )
-
-    out_cols = [
-        F.coalesce(F.col(f"b.{key_col}"), F.col(f"u.{key_col}")).alias(key_col)
-    ]
-    for c in value_cols:
-        out_cols.append(
-            F.when(take_update, F.col(f"u.{c}")).otherwise(F.col(f"b.{c}")).alias(c)
-        )
-    out_cols.append(status.alias("set_status"))
-    return j.select(*out_cols)
+    return [
+        F.when(take_update, new(c)).otherwise(old(c)).alias(c) for c in value_cols
+    ] + [status.alias("set_status")]
 
 
 def delete_treasures(
@@ -167,7 +183,8 @@ def increment(
     ``keys`` switches to the reference's get-or-create mode
     (swamp.go:1277-1280: ``beaconKey.Get`` → ``CreateTreasure``):
     missing keys are created with value 0 before the conditional add,
-    and the output gains a ``created`` flag.
+    and the output gains a ``created`` flag. The reply (<= len(keys)
+    rows) is then collected once and returned as a literal frame.
 
     ``meta_if_not_exist`` / ``meta_if_exist`` stamp per-key metadata
     (proto:1591; swamp.go:1219 ``setMetaForIncrement``) — created keys
@@ -178,69 +195,94 @@ def increment(
     expired_at_us (the ``IncrementResponseMetadata`` analogue,
     proto:1599). ``now_us`` pins the stamp clock (deterministic
     replays); defaults to wall-clock."""
-    work = base
-    created = F.lit(False)
-    if keys is not None:
-        # requested keys are a SET (duplicates would double result rows
-        # and, through the store path, duplicate persisted key rows)
-        keys = list(dict.fromkeys(keys))
-        spark = base.sparkSession
-        kdf = spark.createDataFrame([(k,) for k in keys], f"{key_col} string")
-        # Scale shape: the key list is a driver-side argument (small by
-        # contract), so the probe is a broadcast semi-join and the
-        # created-key set is resolved with ONE bounded collect
-        # (<= len(keys) rows) — a keys-left outer join would instead
-        # shuffle the full base on the key, and caching the hit frame
-        # would pin an entry in the CacheManager for the driver's
-        # lifetime. Cost: the key column is scanned twice (probe +
-        # action), both times with the key filter pushed down.
-        hits = base.join(F.broadcast(kdf), key_col, "left_semi")
-        hit_keys = {
-            r[0] for r in hits.select(key_col).collect()
-        }  # bounded by len(keys)
-        created_keys = [k for k in keys if k not in hit_keys]
-        # created rows carry the FULL base schema (typed nulls except
-        # the value, which starts at 0 — swamp.go:1292 Void -> 0), so
-        # conditions referencing any base column still resolve.
-        # Membership (not value-nullness) decides `created`: an
-        # existing key whose value is NULL is not created, it just
-        # can't be incremented (applied=False).
-        miss = spark.createDataFrame(
-            [(k,) for k in created_keys], f"{key_col} string"
-        )
-        for c, t in base.dtypes:
-            if c != key_col:
-                miss = miss.withColumn(
-                    c,
-                    F.lit(0).cast(t) if c == value_col else F.lit(None).cast(t),
-                )
-        work = hits.withColumn("_created", F.lit(False)).unionByName(
-            miss.withColumn("_created", F.lit(True))
-        )
-        created = F.col("_created")
-    cond = translate(condition, work) if condition is not None else F.lit(True)
+    metas = (meta_if_not_exist, meta_if_exist)
+    if metas != (None, None) and now_us is None:
+        import time as _time
+
+        now_us = _time.time_ns() // 1_000  # one stamp for hit and created rows
+
+    def reply(frame, created):
+        cols = increment_columns(frame, value_col, delta, condition, created, *metas, now_us)
+        return frame.select(F.col(key_col), *[c.alias(n) for n, c in cols.items()])
+
+    if keys is None:
+        return reply(base, F.lit(False))
+    # requested keys are a SET (duplicates would double result rows and,
+    # through the store path, duplicate persisted key rows); the key list
+    # enters the plan as a literal, so the probe is a map-only filter
+    # pushed into the scan, and the reply is ONE bounded collect
+    # (<= len(keys) rows) returned as a literal frame
+    keys = list(dict.fromkeys(keys))
+    hits = reply(base.filter(F.col(key_col).isin(keys)), F.lit(False))
+    rows = [tuple(r) for r in hits.collect()]
+    hit_keys = {r[0] for r in rows}
+    created_keys = [k for k in keys if k not in hit_keys]
+    if created_keys:
+        # created rows carry the FULL base schema (typed nulls except the
+        # value, which starts at 0 — swamp.go:1292 Void -> 0), so
+        # conditions on any base column still resolve. Membership (not
+        # value-nullness) decides `created`: an existing key whose value
+        # is NULL is not created, it just can't be incremented. The
+        # projection over a literal frame folds at planning (no job).
+        miss = literal_frame(
+            base.sparkSession, [(k,) for k in created_keys], f"{key_col} string"
+        ).withColumns({
+            c: F.lit(0).cast(t) if c == value_col else F.lit(None).cast(t)
+            for c, t in base.dtypes
+            if c != key_col
+        })
+        rows += [tuple(r) for r in reply(miss, F.lit(True)).collect()]
+    return literal_frame(base.sparkSession, rows, hits.schema)
+
+
+def increment_columns(
+    frame: DataFrame,
+    value_col: str,
+    delta: float,
+    condition: Optional[Pred],
+    created: Column,
+    meta_if_not_exist: Optional[IncrementMeta] = None,
+    meta_if_exist: Optional[IncrementMeta] = None,
+    now_us: Optional[int] = None,
+) -> "dict[str, Column]":
+    """The per-row columns of :func:`increment` over ``frame``'s rows:
+    old_value, new_value, applied, created and, with either meta, the
+    five stamp columns. A pure projection, so the same expressions
+    serve the result rows and a map-only rewrite of the state."""
+    cond = translate(condition, frame) if condition is not None else F.lit(True)
     old = F.col(value_col)
-    new = F.when(cond, old + F.lit(delta)).otherwise(old)
-    cols = [
-        F.col(key_col),
-        old.alias("old_value"),
-        new.alias("new_value"),
-        (cond & old.isNotNull()).alias("applied"),
-        created.alias("created"),
-    ]
+    cols = {
+        "old_value": old,
+        "new_value": F.when(cond, old + F.lit(delta)).otherwise(old),
+        "applied": cond & old.isNotNull(),
+        "created": created,
+    }
     if meta_if_not_exist is not None or meta_if_exist is not None:
         import time as _time
 
         now = int(now_us if now_us is not None else _time.time_ns() // 1_000)
         for out_name, attr, is_now in _META_FIELDS:
-            cols.append(
-                F.when(
-                    created, _meta_value(meta_if_not_exist, attr, is_now, now)
-                )
-                .otherwise(_meta_value(meta_if_exist, attr, is_now, now))
-                .alias(out_name)
-            )
-    return work.select(*cols)
+            cols[out_name] = F.when(
+                created, _meta_value(meta_if_not_exist, attr, is_now, now)
+            ).otherwise(_meta_value(meta_if_exist, attr, is_now, now))
+    return cols
+
+
+def literal_frame(spark, rows: Sequence[tuple], schema) -> DataFrame:
+    """Request-sized rows as a LocalRelation (via pandas/Arrow): reading
+    it runs no Spark job and no Python worker, unlike a
+    ``createDataFrame(list)`` frame."""
+    import pandas as pd
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    # object columns: no int -> float widening around a None
+    pdf = pd.DataFrame({
+        name: pd.Series([r[i] for r in rows], dtype=object)
+        for i, name in enumerate(schema.fieldNames())
+    })
+    return spark.createDataFrame(pdf, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -341,6 +383,7 @@ def patch_treasures(
     meta: Optional[PatchMeta] = None,
     expired_col: str = "expired_at",
     now_us: Optional[int] = None,
+    rows: Optional[Column] = None,
 ) -> DataFrame:
     """Reference ``PatchTreasures`` (proto:2988-3177, msgpackpatch pkg):
     an ordered op-list applied atomically per row, gated by an optional
@@ -355,10 +398,13 @@ def patch_treasures(
     (shift/patch-expired) read, so a patch-time TTL slide immediately
     affects claimability. Unpatched rows keep their existing values.
     ``now_us`` pins the stamp clock for deterministic replays.
+    ``rows`` restricts the patch to the rows where it holds (a row
+    gate, so the schema stays uniform); every other row passes through
+    unchanged and reports CONDITION_NOT_MET.
 
     Returns all rows with the (possibly) patched body and
     ``patch_status`` ∈ PATCHED / CONDITION_NOT_MET."""
-    structural = condition is None
+    structural = condition is None and rows is None
     patched = F.col(body_col)
     for op in ops:
         patched = _apply_patch_op(patched, op, structural=structural)
@@ -366,7 +412,9 @@ def patch_treasures(
         new_body = patched
         cond = F.lit(True)
     else:
-        cond = translate(condition, base)
+        cond = translate(condition, base) if condition is not None else F.lit(True)
+        if rows is not None:
+            cond = rows & cond
         new_body = F.when(cond, patched).otherwise(F.col(body_col))
     status = F.when(cond, F.lit(STATUS_PATCHED)).otherwise(F.lit(STATUS_CONDITION_NOT_MET))
     # one projection: both expressions must bind to the ORIGINAL body —
@@ -409,19 +457,16 @@ def patch_treasures(
 class PatchBatch:
     """Result of :func:`patch_treasures_batch`: per-key status rows,
     the full new state, and the accepted (patched/created) rows for
-    event emission. ``unpersist()`` releases the internal caches once
-    the caller has consumed all three frames."""
+    event emission. ``unpersist()`` releases the one cache (the
+    targeted rows) once the caller has consumed all three frames."""
 
     results: DataFrame
     new_state: DataFrame
     applied: DataFrame
     _cached: DataFrame
-    _deps: tuple = ()
 
     def unpersist(self) -> None:
         self._cached.unpersist()
-        for d in self._deps:
-            d.unpersist()
 
 
 def patch_treasures_batch(
@@ -463,10 +508,13 @@ def patch_treasures_batch(
     swamp_patch.go's deferred ``creatingTreasures.Delete`` on the
     unsaved path.
 
-    Scale: targeted rows are bounded by ``len(keys)`` (a request-sized
-    broadcast join against state), so the single-partition
-    request-order window and the bounded collect are both O(request),
-    never O(state); the cap pre-count is one scan-side aggregate.
+    Scale: the targeted rows are a literal ``isin`` filter over the
+    state, bounded by ``len(keys)`` and cached ONCE (the hit-key collect
+    fills it), so the single-partition request-order window and the
+    bounded collects are O(request), never O(state); the cap pre-count
+    is one scan-side aggregate. ``new_state`` is one map-only projection
+    over ``base`` (targeted, uncapped keys as literals) plus the created
+    rows — no join against the state.
     """
     from pyspark.sql import types as T
     from pyspark.sql.window import Window
@@ -475,80 +523,66 @@ def patch_treasures_batch(
     if cap is not None and cap.max_matching <= 0:
         raise ValueError("Cap.max_matching must be > 0 (proto:3040)")
     # resolve the meta timestamp ONCE: the targeted and created legs
-    # are patched by separate patch_treasures calls below and must
-    # stamp the same updated_at
+    # and the state projection are separate patch_treasures calls and
+    # must stamp the same updated_at
     if meta is not None and meta.updated_at and now_us is None:
         import time as _time
 
         now_us = int(_time.time_ns() // 1_000)
-    kdf = spark.createDataFrame(
-        [(k, i) for i, k in enumerate(keys)],
-        f"{key_col} string, _req_idx int",
+    req_idx = {k: i for i, k in enumerate(keys)}
+    key_c = F.col(key_col)
+    member = key_c.isin(keys)
+    targeted = base.filter(member).withColumn(
+        "_req_idx",
+        F.create_map(*[F.lit(x) for k, i in req_idx.items() for x in (k, i)])[key_c],
     )
-    targeted = base.join(F.broadcast(kdf), key_col, "inner")
 
-    # stash the pre-patch row (for CAP_EXCEEDED revert) and the
-    # pre-patch cap membership; patch_treasures is a per-row
-    # projection, so patching the targeted and created legs separately
-    # and unioning is row-for-row identical to patching their union
-    orig_cols = [c for c in base.columns if c != key_col]
-
-    def _prep(frame):
-        w = frame.withColumn(
-            "_orig", F.struct(*[F.col(c) for c in orig_cols])
-        )
+    def _prep(frame, rows=F.lit(True)):
+        # the pre-patch cap membership rides along; patch_treasures is
+        # a per-row projection, so patching the targeted and created
+        # legs separately is row-for-row identical to patching their
+        # union (or to the gated projection over the whole state)
         if cap is not None:
-            w = w.withColumn(
+            frame = frame.withColumn(
                 "_pre_match",
                 F.when(F.col("_created"), F.lit(False)).otherwise(
-                    F.coalesce(translate(cap.filter, w), F.lit(False))
+                    F.coalesce(translate(cap.filter, frame), F.lit(False))
                 ),
             )
         return patch_treasures(
-            w,
-            ops,
-            condition=condition,
-            key_col=key_col,
-            body_col=body_col,
-            meta=meta,
-            now_us=now_us,
+            frame, ops, condition=condition, key_col=key_col,
+            body_col=body_col, meta=meta, now_us=now_us, rows=rows,
         )
 
-    # ONE state scan (r16, guide §1.2 fewer jobs): cache the patched
-    # TARGETED rows and collect the hit keys FROM that cache — the
-    # collect is itself the cache-fill action, where previously a
-    # separate hit_keys job scanned the state before the cache-fill
-    # scanned it again. Both frames are request-bounded (≤ len(keys)).
+    # the ONE materialization: the patched targeted rows, filled by the
+    # bounded hit-key collect
     patched0 = _prep(targeted.withColumn("_created", F.lit(False))).cache()
-    hit_keys = {
-        r[0] for r in patched0.select(key_col).collect()
-    }  # bounded by len(keys)
+    hit_keys = {r[0] for r in patched0.select(key_col).collect()}
     missing = [k for k in keys if k not in hit_keys]
 
     patched = patched0
     if create_if_not_exist and missing:
         body_type = base.schema[body_col].dataType
         created_raw = spark.createDataFrame(
-            [(k, keys.index(k), seed_body) for k in missing],
-            T.StructType(
-                [
-                    T.StructField(key_col, T.StringType(), False),
-                    T.StructField("_req_idx", T.IntegerType(), False),
-                    T.StructField(body_col, body_type, True),
-                ]
-            ),
-        )
-        for c, t in base.dtypes:
-            if c not in (key_col, body_col):
-                created_raw = created_raw.withColumn(c, F.lit(None).cast(t))
+            [(k, req_idx[k], seed_body) for k in missing],
+            T.StructType([
+                T.StructField(key_col, T.StringType(), False),
+                T.StructField("_req_idx", T.IntegerType(), False),
+                T.StructField(body_col, body_type, True),
+            ]),
+        ).withColumns({
+            c: F.lit(None).cast(t) for c, t in base.dtypes if c not in (key_col, body_col)
+        })
         patched = patched.unionByName(
             _prep(created_raw.withColumn("_created", F.lit(True)))
         )
 
+    capped_keys: list = []
     if cap is not None:
-        # capPreCount: whole-swamp, once, pre-mutation — as a broadcast
-        # 1-row aggregate folded into the same evaluation (the shift
-        # Cap design; no separate driver-side count job)
+        # capPreCount: whole-swamp, once, pre-mutation — a broadcast
+        # 1-row aggregate beside a running (no→yes) count in request
+        # order over the request-bounded rows; the capped keys come
+        # back as one bounded collect and re-enter every plan as literals
         budget_df = base.agg(
             F.greatest(
                 F.lit(0),
@@ -558,26 +592,25 @@ def patch_treasures_batch(
                 ),
             ).alias("_budget")
         )
-        is_patched = F.col("patch_status") == STATUS_PATCHED
         post_match = F.coalesce(translate(cap.filter, patched), F.lit(False))
-        trans = is_patched & ~F.col("_pre_match") & post_match
-        # running (no→yes) count in request order; the window is
-        # request-bounded (≤ len(keys) rows), so the single partition
-        # it implies is the same boundedness as the hit_keys collect
+        trans = (
+            (F.col("patch_status") == STATUS_PATCHED) & ~F.col("_pre_match") & post_match
+        )
         running = F.sum(F.when(trans, 1).otherwise(0)).over(
             Window.orderBy("_req_idx").rowsBetween(
                 Window.unboundedPreceding, Window.currentRow
             )
         )
-        patched = patched.crossJoin(F.broadcast(budget_df)).withColumn(
-            "_capped", trans & (running > F.col("_budget"))
-        )
-    else:
-        patched = patched.withColumn("_capped", F.lit(False))
-    # the fill reads patched0's cache (plus the budget aggregate's one
-    # state scan under cap) — request-bounded rows, no second state scan
-    patched = patched.cache()
-    patched.count()
+        capped_keys = [
+            r[0]
+            for r in patched.crossJoin(F.broadcast(budget_df))
+            .withColumn("_capped", trans & (running > F.col("_budget")))
+            .filter(F.col("_capped"))
+            .select(key_col)
+            .collect()
+        ]
+    capped = key_c.isin(capped_keys) if capped_keys else F.lit(False)
+    patched = patched.withColumn("_capped", capped)
 
     status = (
         F.when(F.col("_capped"), F.lit("CAP_EXCEEDED"))
@@ -590,51 +623,35 @@ def patch_treasures_batch(
     results = patched.select(key_col, status.alias("patch_status"))
     if missing and not create_if_not_exist:
         results = results.unionByName(
-            spark.createDataFrame(
+            literal_frame(
+                spark,
                 [(k, "KEY_NOT_FOUND") for k in missing],
                 f"{key_col} string, patch_status string",
             )
         )
 
-    # new state: untargeted rows pass through; capped rows revert to
-    # their stashed original; unsaved created rows (condition failed
-    # or capped) are rolled back entirely
-    applied_pred = (
+    # new state: the gated projection over the whole state (capped
+    # keys keep their row), plus the created rows that were saved —
+    # an unsaved created row (condition failed or capped) is rolled
+    # back entirely
+    applied = patched.filter(
         (F.col("patch_status") == STATUS_PATCHED) & ~F.col("_capped")
     )
-    keep_row = ~F.col("_created") | applied_pred
-    out_types = dict(patched.dtypes)
-    aux = {key_col, "patch_status", "_created", "_orig", "_pre_match", "_capped", "_req_idx", "_budget"}
-    value_exprs = []
-    for c in patched.columns:
-        if c in aux:
-            continue
-        orig_val = (
-            F.col("_orig")[c] if c in orig_cols else F.lit(None).cast(out_types[c])
+    new_state = _prep(base.withColumn("_created", F.lit(False)), member & ~capped)
+    new_state = new_state.drop("patch_status", "_created", "_pre_match")
+    if create_if_not_exist and missing:
+        new_state = new_state.unionByName(
+            applied.filter(F.col("_created")).select(*new_state.columns)
         )
-        value_exprs.append(
-            F.when(F.col("_capped"), orig_val).otherwise(F.col(c)).alias(c)
-        )
-    new_rows = patched.filter(keep_row).select(F.col(key_col), *value_exprs)
-    untargeted = base.join(
-        F.broadcast(kdf.select(key_col)), key_col, "left_anti"
-    )
-    new_rows_types = dict(new_rows.dtypes)
-    for c in new_rows.columns:
-        if c not in untargeted.columns:
-            untargeted = untargeted.withColumn(c, F.lit(None).cast(new_rows_types[c]))
-    new_state = untargeted.unionByName(new_rows)
-
-    applied = patched.filter(applied_pred)
-    return PatchBatch(results, new_state, applied, patched, (patched0,))
+    return PatchBatch(results, new_state, applied, patched0)
 
 
 @dataclass
 class PatchEachBatch:
     """Result of :func:`patch_each_batch`: one status row per patch
     ENTRY, the full new state, and the mutated rows for event emission.
-    ``unpersist()`` releases the internal cache once all three frames
-    are consumed."""
+    ``unpersist()`` releases the one cache (the request's rows) once
+    all three frames are consumed."""
 
     results: DataFrame
     new_state: DataFrame
@@ -822,7 +839,6 @@ def patch_each_batch(
         return out.withColumns(cols)
 
     capped: list[set] = [set() for _ in rounds]
-    found: "set | None" = None
 
     if cap is not None:
         # capPreCount (gateway_patch.go:98-105): whole-swamp, once,
@@ -908,9 +924,6 @@ def patch_each_batch(
             # spend), but keep the variable an int
             budget = 0
         budget = int(budget)
-        # round-0 probes cover every key's first occurrence, so the
-        # request's present-key set falls out of the same job
-        found = set(probes[0])
 
         # Budget walk in GLOBAL entry order (gateway_patch.go threads
         # one budgetLeft through the patches loop) — NOT round order:
@@ -943,32 +956,24 @@ def patch_each_batch(
                         if r2 > r:
                             stale[r2].add(k)
 
-    out = base
-    for r in range(len(rounds)):
-        out = _apply_round(out, r, capped[r])
-    any_patched_cols = [f"_hit_{r}" for r in range(len(rounds))]
+    def _final(frame):
+        for r in range(len(rounds)):
+            frame = _apply_round(frame, r, capped[r])
+        return frame
 
     aux = [
         c
         for r in range(len(rounds))
         for c in (f"_status_{r}", f"_idx_{r}", f"_hit_{r}")
     ]
-    out = out.cache()
-    if found is None:
-        # the present-key collect IS the cache-fill action (one job;
-        # bounded by len(patches)) — the cap path already knows the
-        # set from its probe job and only needs the fill
-        found = {
-            row[0]
-            for row in out.filter(key_c.isin(all_keys))
-            .select(key_col)
-            .collect()
-        }
-    else:
-        out.count()
+    # the ONE materialization: the request's rows after every round,
+    # filled by the bounded present-key collect; the new state is the
+    # same rounds as one map-only projection over the whole state
+    touched = _final(base.filter(key_c.isin(all_keys))).cache()
+    found = {row[0] for row in touched.select(key_col).collect()}
 
     per_round = [
-        out.filter(F.col(f"_status_{r}").isNotNull()).select(
+        touched.filter(F.col(f"_status_{r}").isNotNull()).select(
             F.col(f"_idx_{r}").alias("patch_index"),
             key_c,
             F.col(f"_status_{r}").alias("patch_status"),
@@ -979,25 +984,22 @@ def patch_each_batch(
     for p in per_round[1:]:
         results = results.unionByName(p)
     nf = [
-        (idx, k)
+        (idx, k, "KEY_NOT_FOUND")
         for r_entries in rounds
         for idx, k, _, _, _ in r_entries
         if k not in found
     ]
     if nf:
-        results = results.unionByName(
-            spark.createDataFrame(
-                [(idx, k, "KEY_NOT_FOUND") for idx, k in nf],
-                f"patch_index int, {key_col} string, patch_status string",
-            )
-        )
+        results = results.unionByName(literal_frame(
+            spark, nf, f"patch_index int, {key_col} string, patch_status string"
+        ))
 
-    new_state = out.drop(*aux)
+    new_state = _final(base).drop(*aux)
     hit_any = F.lit(False)
-    for c in any_patched_cols:
-        hit_any = hit_any | F.col(c)
-    changed = out.filter(hit_any)
-    return PatchEachBatch(results, new_state, changed, out)
+    for r in range(len(rounds)):
+        hit_any = hit_any | F.col(f"_hit_{r}")
+    changed = touched.filter(hit_any)
+    return PatchEachBatch(results, new_state, changed, touched)
 
 
 # ---------------------------------------------------------------------------

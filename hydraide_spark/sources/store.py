@@ -8,6 +8,12 @@ Maps the reference's per-swamp storage + reactivity model (SURVEY.md
 - **state** lives in versioned parquet snapshots ``root/v=N/``; a write
   produces v=N+1 (the Spark reading of the reference's append-only
   chronicle + compaction: every snapshot is already compact).
+- **commit shape**: a write materializes its request-bounded touched
+  rows once (a literal key filter, or the claim's top-k) and holds them
+  until the next transaction; it writes v=N+1 as one map-only projection
+  over v=N with the request keys as plan literals (a DataFrame ``set``
+  broadcast-joins its cached request instead); its event file and reply
+  come from the touched rows, so the reply survives a ``compact()``.
 - **changes** append to ``root/changes/`` as parquet batches with the
   reference's event shape (proto:755-784): op NEW/UPDATED/DELETED, key,
   old/new row payloads (JSON-encoded, schema-agnostic), event_time, and
@@ -51,6 +57,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import time
 from datetime import datetime, timezone
 from typing import Optional, Sequence
 
@@ -79,6 +86,11 @@ def _serialized(method):
     def wrapper(self, *args, **kwargs):
         with self._txn:
             self._scope = None  # never inherit a failed txn's scope
+            if self._txn_depth == 0 and self._held is not None:
+                # the previous commit's touched rows back the frames it
+                # returned; this commit supersedes them
+                self._held.unpersist()
+                self._held = None
             self._txn_depth += 1
             try:
                 return method(self, *args, **kwargs)
@@ -160,6 +172,12 @@ class TreasureStore:
         self._last_access: float = 0.0
         self._txn = threading.RLock()
         self._txn_depth = 0
+        # the last commit's one materialization (its touched rows),
+        # released when the next transaction starts
+        self._held = None
+        # version -> data schema, known from the write that made it, so
+        # reads skip the parquet footer-inference job
+        self._schema_cache: dict = {}
         # opt-in workload telemetry for the layout advisor (r12): write
         # batch sizes + external scan count. Off by default — recording
         # a set() batch size costs one count job on the (batch-sized)
@@ -368,9 +386,7 @@ class TreasureStore:
         to the init seed for pre-schema versions."""
         from pyspark.sql import types as _T
 
-        cache = getattr(self, "_schema_cache", None)
-        if cache is None:
-            cache = self._schema_cache = {}
+        cache = self._schema_cache
         if v not in cache:
             sp = os.path.join(self._snapshot_path(v), "_SCHEMA")
             try:
@@ -432,15 +448,15 @@ class TreasureStore:
     def _touched_buckets(self, keys) -> list[int]:
         """Bucket ids a key set hashes into. ``keys`` is a python
         sequence or a DataFrame carrying ``key_col``; the collect is
-        bounded by min(|keys|, n_buckets)."""
-        if not isinstance(keys, DataFrame):
-            keys = self.spark.createDataFrame(
-                [(str(k),) for k in keys], f"{self.key_col} string"
-            )
-        rows = (
-            keys.select(self._bucket_expr().alias("_b")).distinct().collect()
-        )
-        return sorted(r["_b"] for r in rows)
+        bounded by min(|keys|, n_buckets); a key list is a plan literal,
+        so its buckets are computed without a Spark job."""
+        if isinstance(keys, DataFrame):
+            keys = keys.select(self._bucket_expr().alias("_b")).distinct()
+        else:
+            keys = mutate_ops.literal_frame(
+                self.spark, [(str(k),) for k in keys], f"{self.key_col} string"
+            ).select(self._bucket_expr().alias("_b"))
+        return sorted({r["_b"] for r in keys.collect()})
 
     def _scope_to(self, keys) -> None:
         """Scope the CURRENT transaction to the buckets ``keys`` hash
@@ -489,15 +505,23 @@ class TreasureStore:
             # IsInMemorySwamp: pin the live snapshot in executor memory;
             # a version bump invalidates the pin (new snapshot, new
             # cache), close_if_idle releases it (CloseAfterIdle).
-            import time
-
             if self._cached is None or self._cached[0] != v:
                 if self._cached is not None:
                     self._cached[1].unpersist()
-                self._cached = (v, self.spark.read.parquet(self._snapshot_path(v)).cache())
+                self._cached = (v, self._plain_read(v).cache())
             self._last_access = time.monotonic()
             return self._cached[1]
-        return self.spark.read.parquet(self._snapshot_path(v))
+        return self._plain_read(v)
+
+    def _plain_read(self, v: int) -> DataFrame:
+        schema = self._schema_cache.get(v)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._snapshot_path(v))
+
+    def _write_plain(self, df: DataFrame, v: int) -> None:
+        self._writer(df).parquet(self._snapshot_path(v))
+        if not self.partition_by:  # partitioned reads keep discovery order
+            self._schema_cache[v] = df.schema
 
     def close_if_idle(self, now: Optional[float] = None) -> bool:
         """Reference CloseAfterIdle (proto:810-815): release the pinned
@@ -506,8 +530,6 @@ class TreasureStore:
         is injectable for tests. Returns True if the pin was released.
         Data is never lost — snapshots are already durable parquet, so
         'close + flush' reduces to dropping the cache."""
-        import time
-
         if self._cached is None or self.settings is None:
             return False
         now = time.monotonic() if now is None else now
@@ -526,7 +548,7 @@ class TreasureStore:
             raise FileNotFoundError(f"store {self.root} has no snapshot v={v}")
         if self.n_buckets is not None:
             return self._bucketed_read(v)
-        return self.spark.read.parquet(self._snapshot_path(v))
+        return self._plain_read(v)
 
     def history(self) -> DataFrame:
         """SCD2 history from the change log: one row per key VERSION
@@ -567,7 +589,7 @@ class TreasureStore:
             )
             self._write_bucketed(df, self.version + 1, base_mapping={})
             return
-        self._writer(df).parquet(self._snapshot_path(self.version + 1))
+        self._write_plain(df, self.version + 1)
 
     def _writer(self, df: DataFrame):
         w = df.write.mode("overwrite")
@@ -651,6 +673,7 @@ class TreasureStore:
         import shutil
 
         shutil.rmtree(self.root, ignore_errors=True)
+        self._schema_cache.clear()
 
     def compact(self, keep_versions: int = 1) -> int:
         """Reference ``CompactSwamp`` (proto:2967-2977; compactor.go):
@@ -796,7 +819,7 @@ class TreasureStore:
                 self._write_bucketed(df, v, base_mapping, base_flat)
             self._scope = None
             return v
-        self._writer(df).parquet(self._snapshot_path(v))
+        self._write_plain(df, v)
         return v
 
     def _write_flat(self, df: DataFrame, v: int) -> None:
@@ -862,7 +885,7 @@ class TreasureStore:
         else:
             # write the plain snapshot FIRST (the read plan still
             # resolves the bucketed dirs), then flip the layout
-            self._writer(df).parquet(self._snapshot_path(v))
+            self._write_plain(df, v)
             self.n_buckets = None
             with open(os.path.join(self.root, "_LAYOUT"), "w") as fh:
                 json.dump({"n_buckets": 0}, fh)
@@ -932,7 +955,24 @@ class TreasureStore:
     def _payload(df: DataFrame, cols: Sequence[str]) -> F.Column:
         return F.to_json(F.struct(*[F.col(c) for c in cols]))
 
-    # -- mutations (each is one serialized transaction) ---------------------
+    def _events(self, rows: DataFrame, op, new_cols=None, old=None) -> DataFrame:
+        """Change-event rows: ``op`` (a name or a column), the payload of
+        ``new_cols`` as ``new``, and ``old``."""
+        none = F.lit(None).cast("string")
+        return rows.select(
+            F.col(self.key_col),
+            (F.lit(op) if isinstance(op, str) else op).alias("op"),
+            (none if new_cols is None else self._payload(rows, new_cols)).alias("new"),
+            (none if old is None else old).alias("old"),
+        )
+
+    def _hold(self, touched: DataFrame) -> DataFrame:
+        """Cache a commit's touched rows until the next transaction."""
+        self._held = touched.cache()
+        return self._held
+
+    # -- mutations (each is one serialized transaction; commit shape in
+    # the module docstring) ---------------------------------------------
 
     @_serialized
     def set(
@@ -950,59 +990,90 @@ class TreasureStore:
         request keys (at scale, enumerating a NOTHING_CHANGED row for
         every untouched key in a billion-row store is neither useful
         nor possible; the reference returns per-request statuses
-        too)."""
-        self._scope_to(updates)
-        base = self.current()
-        value_cols = [c for c in updates.columns if c != self.key_col]
-        merged = mutate_ops.set_treasures(
-            base, updates, self.key_col, create_if_not_exist, overwrite
-        ).cache()
-        new_state = merged.filter(
-            F.col("set_status") != mutate_ops.STATUS_NOT_CREATED
-        ).drop("set_status")
-        batch = self._write_version(new_state)
+        too).
 
-        old = base.select(
-            F.col(self.key_col), self._payload(base, value_cols).alias("old")
-        )
-        events = (
-            merged.filter(
-                F.col("set_status").isin(
-                    mutate_ops.STATUS_NEW, mutate_ops.STATUS_UPDATED
+        The request frame is cached once, so its measured size picks a
+        broadcast under ``autoBroadcastJoinThreshold``; a bulk frame is
+        never collected."""
+        key = self.key_col
+        level = updates.storageLevel
+        owned = not (level.useMemory or level.useDisk)
+        upd = updates.cache()
+        try:
+            self._scope_to(upd)  # bucketed: the bucket collect fills it
+            if self.n_buckets is None:
+                upd.write.format("noop").mode("overwrite").save()
+            base = self.current()
+            vals = [c for c in upd.columns if c != key and c in base.columns]
+            hits = base.join(upd.select(key), key, "left_semi").select(
+                key,
+                F.lit(True).alias("_in_base"),
+                *[F.col(c).alias(f"_old_{c}") for c in vals],
+            )
+            in_base = F.col("_in_base").isNotNull()
+            touched = self._hold(
+                upd.select(key, *vals).join(hits, key, "left").select(
+                    key,
+                    *mutate_ops.set_columns(
+                        vals, lambda c: F.col(f"_old_{c}"), F.col, in_base,
+                        F.lit(True), create_if_not_exist, overwrite,
+                    ),
+                    in_base.alias("_in_base"),
+                    F.when(in_base, F.to_json(F.struct(
+                        *[F.col(f"_old_{c}").alias(c) for c in vals]
+                    ))).alias("_old"),
                 )
             )
-            .withColumn("op", F.col("set_status"))
-            .withColumn("new", self._payload(merged, value_cols))
-            .join(old, self.key_col, "left")
-            .withColumn(
-                "old",
-                F.when(F.col("op") == mutate_ops.STATUS_UPDATED, F.col("old")),
+            # fill it once, before the write plan reads it twice
+            touched.write.format("noop").mode("overwrite").save()
+            new_state = base.select(key, *vals)
+            status = F.col("set_status")
+            if overwrite:
+                changed = touched.filter(
+                    status == mutate_ops.STATUS_UPDATED
+                ).select(key, F.lit(True).alias("_upd"), *[
+                    F.col(c).alias(f"_new_{c}") for c in vals
+                ])
+                new_state = new_state.join(changed, key, "left").select(key, *[
+                    F.when(F.col("_upd"), F.col(f"_new_{c}")).otherwise(F.col(c)).alias(c)
+                    for c in vals
+                ])
+            new_state = new_state.unionByName(
+                touched.filter(status == mutate_ops.STATUS_NEW).select(key, *vals)
             )
-            .withColumn("op", F.when(F.col("op") == "UPDATED", "UPDATED").otherwise("NEW"))
+            scope = self._scope
+            batch = self._write_version(new_state)
+        finally:
+            if owned:
+                upd.unpersist()
+        events = touched.filter(
+            status.isin(mutate_ops.STATUS_NEW, mutate_ops.STATUS_UPDATED)
         )
-        self._emit(events, batch)
-        statuses = merged.select(self.key_col, "set_status")
-        merged.unpersist()
-        return statuses
+        old = F.when(status == mutate_ops.STATUS_UPDATED, F.col("_old"))
+        self._emit(self._events(events, status, vals, old), batch)
+        written = (
+            self._bucketed_read(batch, buckets=scope)
+            if self.n_buckets is not None
+            else self._plain_read(batch)
+        )
+        untouched = written.join(touched.select(key), key, "left_anti").select(
+            key, F.lit(mutate_ops.STATUS_NOTHING_CHANGED).alias("set_status")
+        )
+        return touched.select(key, "set_status").unionByName(untouched)
 
     @_serialized
     def delete(self, keys: Sequence[str]) -> DataFrame:
+        keys = list(keys)
         self._scope_to(keys)
         base = self.current()
         value_cols = [c for c in base.columns if c != self.key_col]
         remaining, deleted = mutate_ops.delete_treasures(base, keys, self.key_col)
-        deleted = deleted.cache()
+        deleted = self._hold(deleted)
+        reply = deleted.select(self.key_col).withColumn("deleted", F.lit(True))
+        rows = [tuple(r) for r in reply.collect()]
         batch = self._write_version(remaining)
-        events = deleted.select(
-            F.col(self.key_col),
-            F.lit("DELETED").alias("op"),
-            F.lit(None).cast("string").alias("new"),
-            self._payload(deleted, value_cols).alias("old"),
-        )
-        self._emit(events, batch)
-        out = deleted.select(self.key_col).withColumn("deleted", F.lit(True))
-        deleted.unpersist()
-        return out
+        self._emit(self._events(deleted, "DELETED", old=self._payload(deleted, value_cols)), batch)
+        return mutate_ops.literal_frame(self.spark, rows, reply.schema)
 
     @_serialized
     def increment(
@@ -1040,82 +1111,53 @@ class TreasureStore:
         (swamp.go:1345-1349) — so an unapplied existing key's stamp is
         visible in the response yet absent from subsequent reads, there
         as here."""
+        key = self.key_col
+        keys = list(dict.fromkeys(keys))
         self._scope_to(keys)
         base = self.current()
-        value_cols = [c for c in base.columns if c != self.key_col]
+        value_cols = [c for c in base.columns if c != key]
         has_meta = meta_if_not_exist is not None or meta_if_exist is not None
+        if has_meta and now_us is None:
+            now_us = time.time_ns() // 1_000  # one stamp for rows and state
+        metas = (meta_if_not_exist, meta_if_exist, now_us)
+        touched = self._hold(base.filter(F.col(key).isin(keys)))
+        # the operator's bounded reply collect fills the held cache
         results = mutate_ops.increment(
-            base,
-            value_col,
-            delta,
-            condition,
-            key_col=self.key_col,
-            keys=list(keys),
-            meta_if_not_exist=meta_if_not_exist,
-            meta_if_exist=meta_if_exist,
-            now_us=now_us,
-        ).cache()
-        results.count()
-        meta_cols = [f[0] for f in mutate_ops._META_FIELDS] if has_meta else []
-
-        applied_existing = results.filter(F.col("applied") & ~F.col("created"))
-        upd = applied_existing.select(
-            self.key_col,
-            "new_value",
-            *[F.col(m).alias(f"_{m}_stamp") for m in meta_cols],
+            touched, value_col, delta, condition, key, keys, *metas
         )
-        new_state = (
-            base.join(upd, self.key_col, "left")
-            .withColumn(
-                value_col, F.coalesce(F.col("new_value"), F.col(value_col))
+
+        def written(frame: DataFrame) -> DataFrame:
+            # existing rows after the increment, as one projection: the
+            # operator's per-row columns, gated to the request keys
+            c = mutate_ops.increment_columns(
+                frame, value_col, delta, condition, F.lit(False), *metas
             )
-            .drop("new_value")
-        )
-        for m in meta_cols:
-            stamped = F.col(f"_{m}_stamp")
-            new_state = new_state.withColumn(
-                m,
-                F.coalesce(stamped, F.col(m)) if m in base.columns else stamped,
-            ).drop(f"_{m}_stamp")
+            applied = F.col(key).isin(keys) & c["applied"]
+            cols = {
+                value_col: F.when(applied, c["new_value"]).otherwise(F.col(value_col)),
+                "_applied": applied,
+            }
+            for m, _a, _n in mutate_ops._META_FIELDS if has_meta else ():
+                cur = F.col(m) if m in frame.columns else F.lit(None)
+                cols[m] = F.when(applied, F.coalesce(c[m], cur)).otherwise(cur)
+            return frame.withColumns(cols)
 
-        created_rows = None
+        new_state = written(base).drop("_applied")
+        events = self._events(
+            written(touched).filter(F.col("_applied")), "UPDATED", value_cols
+        )
         if create_if_not_exist:
-            created = results.filter(F.col("created"))
-            state_types = dict(new_state.dtypes)
-            created_rows = created.select(
-                F.col(self.key_col),
-                *[
-                    F.col("new_value").cast(state_types[c]).alias(c)
-                    if c == value_col
-                    else (
-                        F.col(c).alias(c)
-                        if c in meta_cols
-                        else F.lit(None).cast(state_types[c]).alias(c)
-                    )
-                    for c in new_state.columns
-                    if c != self.key_col
-                ],
-            )
-            new_state = new_state.unionByName(created_rows)
-
+            meta_cols = {m for m, _a, _n in mutate_ops._META_FIELDS} if has_meta else set()
+            created = results.filter(F.col("created")).select(F.col(key), *[
+                F.col("new_value").cast(t).alias(c) if c == value_col
+                else F.col(c) if c in meta_cols
+                else F.lit(None).cast(t).alias(c)
+                for c, t in new_state.dtypes
+                if c != key
+            ])
+            new_state = new_state.unionByName(created)
+            events = events.unionByName(self._events(created, "NEW", value_cols))
         batch = self._write_version(new_state)
-        applied_keys = applied_existing.select(self.key_col)
-        updated = new_state.join(applied_keys, self.key_col)
-        events = updated.select(
-            F.col(self.key_col),
-            F.lit("UPDATED").alias("op"),
-            self._payload(updated, value_cols).alias("new"),
-            F.lit(None).cast("string").alias("old"),
-        )
-        if created_rows is not None:
-            events = events.unionByName(
-                created_rows.select(
-                    F.col(self.key_col),
-                    F.lit("NEW").alias("op"),
-                    self._payload(created_rows, value_cols).alias("new"),
-                    F.lit(None).cast("string").alias("old"),
-                )
-            )
         self._emit(events, batch)
         if not create_if_not_exist:
             return results.filter(~F.col("created"))
@@ -1136,11 +1178,12 @@ class TreasureStore:
     def _uint32slice_op(
         self, keys: Sequence[str], values: Sequence[int], ids_col: str, push: bool
     ) -> DataFrame:
+        keys = list(keys)
         self._scope_to(keys)
         base = self.current()
         value_cols = [c for c in base.columns if c != self.key_col]
         lits = F.array(*[F.lit(int(v)) for v in values]).cast("array<bigint>")
-        targeted = F.col(self.key_col).isin(list(keys))
+        targeted = F.col(self.key_col).isin(keys)
         new_ids = (
             F.array_distinct(F.concat(F.col(ids_col), lits))
             if push
@@ -1148,52 +1191,37 @@ class TreasureStore:
         )
         # array_distinct keeps first-seen order, array_except preserves
         # order too — a changed set always differs element-wise
-        merged = base.withColumn(
-            "_new_ids", F.when(targeted, new_ids).otherwise(F.col(ids_col))
-        ).withColumn("_changed", ~(F.col("_new_ids") == F.col(ids_col)))
-        new_state = merged.withColumn(ids_col, F.col("_new_ids")).drop(
-            "_new_ids", "_changed"
+        touched = self._hold(base.filter(targeted).withColumns(
+            {ids_col: new_ids, "_changed": ~(new_ids == F.col(ids_col))}
+        ))
+        changed = touched.filter(F.col("_changed"))
+        reply = changed.select(self.key_col).withColumn("changed", F.lit(True))
+        rows = [tuple(r) for r in reply.collect()]
+        batch = self._write_version(
+            base.withColumn(ids_col, F.when(targeted, new_ids).otherwise(F.col(ids_col)))
         )
-        changed = merged.filter(F.col("_changed")).cache()
-        changed.count()
-        batch = self._write_version(new_state)
-        ev_rows = new_state.join(changed.select(self.key_col), self.key_col)
-        self._emit(
-            ev_rows.select(
-                F.col(self.key_col),
-                F.lit("UPDATED").alias("op"),
-                self._payload(ev_rows, value_cols).alias("new"),
-                F.lit(None).cast("string").alias("old"),
-            ),
-            batch,
-        )
-        out = changed.select(self.key_col).withColumn("changed", F.lit(True))
-        changed.unpersist()
-        return out
+        self._emit(self._events(changed, "UPDATED", value_cols), batch)
+        return mutate_ops.literal_frame(self.spark, rows, reply.schema)
+
+    def _claim(self, base: DataFrame, claimed: DataFrame) -> DataFrame:
+        """Commit a claim: materialize the claimed rows once, drop their
+        keys from the state as literals, emit DELETED events."""
+        value_cols = [c for c in base.columns if c != self.key_col]
+        claimed = self._hold(claimed)
+        keys = [r[0] for r in claimed.select(self.key_col).collect()]
+        self._scope_to(keys)  # write-prune: only claimed buckets
+        remaining, _ = mutate_ops.delete_treasures(base, keys, self.key_col)
+        batch = self._write_version(remaining)
+        self._emit(self._events(claimed, "DELETED", old=self._payload(claimed, value_cols)), batch)
+        return claimed
 
     @_serialized
     def shift_expired(self, now: datetime, how_many: int) -> DataFrame:
         """TTL-queue pop as one serialized transaction: claim, persist
         state without claimed rows, emit DELETED events, return claimed."""
         base = self.current()
-        value_cols = [c for c in base.columns if c != self.key_col]
-        claimed, remaining = claims_ops.shift_expired(
-            base, now, how_many, key_col=self.key_col
-        )
-        claimed = claimed.cache()
-        claimed.count()  # pin the claim set before the snapshot swaps
-        self._scope_to(claimed)  # write-prune: only claimed buckets
-        batch = self._write_version(remaining)
-        self._emit(
-            claimed.select(
-                F.col(self.key_col),
-                F.lit("DELETED").alias("op"),
-                F.lit(None).cast("string").alias("new"),
-                self._payload(claimed, value_cols).alias("old"),
-            ),
-            batch,
-        )
-        return claimed
+        claimed, _ = claims_ops.shift_expired(base, now, how_many, key_col=self.key_col)
+        return self._claim(base, claimed)
 
     @_serialized
     def shift_matching(
@@ -1211,24 +1239,10 @@ class TreasureStore:
         observe overlapping sets (tested with interleaved threads in
         test_store_streaming)."""
         base = self.current()
-        value_cols = [c for c in base.columns if c != self.key_col]
-        claimed, remaining = claims_ops.shift_matching(
+        claimed, _ = claims_ops.shift_matching(
             base, index, filt, how_many, cap, key_col=self.key_col
         )
-        claimed = claimed.cache()
-        claimed.count()  # pin the claim set before the snapshot swaps
-        self._scope_to(claimed)  # write-prune: only claimed buckets
-        batch = self._write_version(remaining)
-        self._emit(
-            claimed.select(
-                F.col(self.key_col),
-                F.lit("DELETED").alias("op"),
-                F.lit(None).cast("string").alias("new"),
-                self._payload(claimed, value_cols).alias("old"),
-            ),
-            batch,
-        )
-        return claimed
+        return self._claim(base, claimed)
 
     @_serialized
     def patch(
@@ -1296,18 +1310,11 @@ class TreasureStore:
             now_us=now_us,
             cap=cap,
         )
+        self._held = batch_out
         batch = self._write_version(batch_out.new_state)
-
         value_cols = [c for c in batch_out.new_state.columns if c != self.key_col]
-        changed = batch_out.applied
-        events = changed.select(
-            F.col(self.key_col),
-            F.when(F.col("_created"), "NEW").otherwise("UPDATED").alias("op"),
-            self._payload(changed, value_cols).alias("new"),
-            F.lit(None).cast("string").alias("old"),
-        )
-        self._emit(events, batch)
-        batch_out.unpersist()
+        op = F.when(F.col("_created"), "NEW").otherwise("UPDATED")
+        self._emit(self._events(batch_out.applied, op, value_cols), batch)
         return batch_out.results
 
     @_serialized
@@ -1372,21 +1379,11 @@ class TreasureStore:
             expired_col=expired_col,
             cap=cap,
         )
+        self._held = batch_out
         batch = self._write_version(batch_out.new_state)
         value_cols = [c for c in batch_out.new_state.columns if c != self.key_col]
-        changed = batch_out.changed
-        self._emit(
-            changed.select(
-                F.col(self.key_col),
-                F.lit("UPDATED").alias("op"),
-                self._payload(changed, value_cols).alias("new"),
-                F.lit(None).cast("string").alias("old"),
-            ),
-            batch,
-        )
-        batch_out.unpersist()
+        self._emit(self._events(batch_out.changed, "UPDATED", value_cols), batch)
         return batch_out.results
-
 
     @_serialized
     def patch_expired(
@@ -1398,25 +1395,26 @@ class TreasureStore:
         condition: Optional[Pred] = None,
         cap: Optional[claims_ops.Cap] = None,
     ) -> DataFrame:
+        """Reference ``PatchExpiredTreasures`` as one serialized
+        transaction: the leased rows are materialized once, dropped from
+        the state by literal key and re-inserted patched; UPDATED events
+        for the PATCHED rows."""
+        key = self.key_col
         base = self.current()
-        value_cols = [c for c in base.columns if c != self.key_col]
-        results, new_state = claims_ops.patch_expired(
-            base, now, how_many, lease, ops, condition, cap, key_col=self.key_col
+        value_cols = [c for c in base.columns if c != key]
+        results, _ = claims_ops.patch_expired(
+            base, now, how_many, lease, ops, condition, cap, key_col=key
         )
-        results = results.cache()
-        results.count()
-        patched = results.filter(F.col("patch_status") == mutate_ops.STATUS_PATCHED)
-        self._scope_to(patched)  # write-prune: only re-leased buckets
-        batch = self._write_version(new_state)
-        self._emit(
-            patched.select(
-                F.col(self.key_col),
-                F.lit("UPDATED").alias("op"),
-                self._payload(patched, value_cols).alias("new"),
-                F.lit(None).cast("string").alias("old"),
-            ),
-            batch,
+        results = self._hold(results)
+        status = F.col("patch_status")
+        selected = results.select(key, status).collect()
+        self._scope_to(  # write-prune: only re-leased buckets
+            [r[0] for r in selected if r[1] == mutate_ops.STATUS_PATCHED]
         )
+        remaining, _ = mutate_ops.delete_treasures(base, [r[0] for r in selected], key)
+        batch = self._write_version(remaining.unionByName(results.drop("patch_status")))
+        patched = results.filter(status == mutate_ops.STATUS_PATCHED)
+        self._emit(self._events(patched, "UPDATED", value_cols), batch)
         return results
 
 

@@ -120,3 +120,51 @@ def test_pin_latest_never_evicts_plan_shared_entries(spark):
     assert not g2.storageLevel.useMemory  # different plan: evicted
     assert g3.storageLevel.useMemory
     release_all_pinned()
+
+
+def test_store_commits_leave_cache_footprint_flat(spark, tmp_path):
+    """A TreasureStore commit caches its touched rows once and the next
+    commit releases them, so N mixed commits leave the CacheManager
+    where the first one left it: at most one entry per store."""
+    from datetime import datetime, timedelta
+
+    from hydraide_spark.operators.mutate import PatchKind, PatchOp
+    from hydraide_spark.query import Cmp, Op
+    from hydraide_spark.query.index import Index, IndexOrder, IndexType
+    from hydraide_spark.sources.store import TreasureStore
+
+    schema = "key string, val long, body struct<n:bigint>, expired_at timestamp"
+    store = TreasureStore(spark, str(tmp_path / "store"))
+    store.init(spark.range(200).select(
+        F.format_string("k%03d", "id").alias("key"),
+        (F.col("id") % 10).alias("val"),
+        F.struct((F.col("id") % 5).alias("n")).alias("body"),
+        F.when(F.col("id") % 2 == 0, F.lit(datetime(2020, 1, 1))).alias("expired_at"),
+    ))
+    inc = [PatchOp(PatchKind.INC, "n", 1)]
+    by_key = Index(index_type=IndexType.KEY, order=IndexOrder.ASC)
+
+    def commits(i):
+        keys = [f"k{(i * 37 + j * 7) % 200:03d}" for j in range(10)]
+        yield lambda: store.set(spark.createDataFrame(
+            [(k, 1, (1,), None) for k in keys] + [(f"new{i}", 2, (0,), None)], schema
+        ))
+        yield lambda: store.increment(keys, "val", 1, condition=Cmp("val", Op.LT, 9))
+        yield lambda: store.patch(keys, inc)
+        yield lambda: store.patch_each([(k, inc, None) for k in keys[:3]])
+        yield lambda: store.delete(keys[:2])
+        yield lambda: store.shift_matching(by_key, Cmp("val", Op.GE, 5), how_many=3)
+        yield lambda: store.shift_expired(datetime(2021, 1, 1), how_many=2)
+        yield lambda: store.patch_expired(
+            datetime(2021, 1, 1), 2, lease=timedelta(minutes=5), ops=inc
+        )
+
+    release_all_pinned()
+    base = _n_cached(spark)
+    store.increment(["k001"], "val", 1).collect()
+    after_one = _n_cached(spark)
+    assert after_one <= base + 1
+    for i in range(2):
+        for commit in commits(i):
+            commit().collect()
+    assert _n_cached(spark) == after_one

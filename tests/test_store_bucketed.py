@@ -18,10 +18,10 @@ from hydraide_spark.sources.store import TreasureStore
 SCHEMA = "key string, val long, expired_at timestamp"
 
 
-def _mk(spark, path, n_buckets=None, rows=None):
+def _mk(spark, path, n_buckets=None, rows=None, schema=SCHEMA):
     store = TreasureStore(spark, str(path), n_buckets=n_buckets)
     data = rows if rows is not None else [(f"k{i}", i, None) for i in range(40)]
-    store.init(spark.createDataFrame(data, SCHEMA))
+    store.init(spark.createDataFrame(data, schema))
     return store
 
 
@@ -38,8 +38,17 @@ def _events(store):
 
 
 def test_bucketed_equals_plain_over_mutation_script(spark, tmp_path):
-    plain = _mk(spark, tmp_path / "plain")
-    buck = _mk(spark, tmp_path / "buck", n_buckets=8)
+    """Both layouts agree on every keyed write and claim — set,
+    delete, increment, patch, shift_matching — in replies, final state
+    and change events (payloads included)."""
+    from hydraide_spark.operators.mutate import PatchKind, PatchOp
+    from hydraide_spark.query import Cmp, Op
+    from hydraide_spark.query.index import Index, IndexOrder, IndexType
+
+    schema = SCHEMA + ", body struct<n:bigint>"
+    rows = [(f"k{i}", i, None, (i % 3,)) for i in range(40)]
+    plain = _mk(spark, tmp_path / "plain", rows=rows, schema=schema)
+    buck = _mk(spark, tmp_path / "buck", n_buckets=8, rows=rows, schema=schema)
 
     req = {"k3", "zz", "k5"}
 
@@ -54,8 +63,9 @@ def test_bucketed_equals_plain_over_mutation_script(spark, tmp_path):
                 (r["key"], r["set_status"])
                 for r in store.set(
                     spark.createDataFrame(
-                        [("k3", 300, None), ("zz", 1, None), ("k5", 5, None)],
-                        SCHEMA,
+                        [("k3", 300, None, (7,)), ("zz", 1, None, (0,)),
+                         ("k5", 5, None, (2,))],
+                        schema,
                     )
                 ).collect()
                 if r["key"] in req
@@ -72,11 +82,24 @@ def test_bucketed_equals_plain_over_mutation_script(spark, tmp_path):
                 )
             )
         )
+        out.append(sorted(map(tuple, store.patch(
+            ["k2", "k9", "ghost"], [PatchOp(PatchKind.INC, "n", 1)],
+            condition=Cmp("body.n", Op.LT, 2),
+        ).collect())))
+        out.append(sorted(r["key"] for r in store.shift_matching(
+            Index(index_type=IndexType.KEY, order=IndexOrder.ASC),
+            Cmp("val", Op.GE, 30), how_many=3,
+        ).collect()))
         return out
 
     assert script(plain) == script(buck)
     assert _state(plain) == _state(buck)
     assert _events(plain) == _events(buck)
+    payloads = [
+        sorted((r["batch_id"], r["key"], r["new"], r["old"]) for r in s.changes().collect())
+        for s in (plain, buck)
+    ]
+    assert payloads[0] == payloads[1]
     # reopening without constructor args adopts the persisted layout
     reopened = TreasureStore(spark, str(tmp_path / "buck"))
     assert reopened.n_buckets == 8

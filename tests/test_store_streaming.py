@@ -69,6 +69,8 @@ def test_insert_only_and_update_only(spark, tmp_path):
     )
     st = {r["key"]: r["set_status"] for r in store.set(updates, overwrite=False).collect()}
     assert st["a"] == "NOT_CREATED" and st["x"] == "NEW"
+    # an insert-only hit leaves the existing row as it was
+    assert {r["key"]: r["val"] for r in store.current().collect()}["a"] == 1
     # update-only: new keys refused
     st2 = {
         r["key"]: r["set_status"]
@@ -2505,3 +2507,93 @@ def test_streaming_bloom_converges_and_replay_is_noop(spark, tmp_path):
         ).collect()
     }
     assert all(got[f"user{i}"] == 1 for i in range(40))
+
+
+def _commit_store(spark, tmp_path, name="commits"):
+    store = TreasureStore(spark, str(tmp_path / name))
+    store.init(spark.range(60).select(
+        F.format_string("k%02d", "id").alias("key"),
+        (F.col("id") % 10).alias("val"),
+        F.struct((F.col("id") % 4).alias("n")).alias("body"),
+        F.when(F.col("id") % 3 == 0, F.lit(datetime(2020, 1, 1))).alias("expired_at"),
+        F.array(F.col("id")).alias("ids"),
+    ))
+    return store
+
+
+def test_returned_frames_survive_a_following_compact(spark, tmp_path):
+    """Every mutation and claim returns a frame that stays readable
+    after a compact() that directly follows the call, which drops the
+    snapshot the call read (set's statuses used to re-read it lazily
+    and fail with a missing file under v=N)."""
+    from hydraide_spark.query.index import Index, IndexOrder, IndexType
+
+    store = _commit_store(spark, tmp_path)
+    schema = ",".join(f"{f.name} {f.dataType.simpleString()}" for f in store.current().schema)
+    inc = [PatchOp(PatchKind.INC, "n", 1)]
+    calls = {
+        "set": lambda: store.set(spark.createDataFrame(
+            [("k01", 99, (1,), None, [1]), ("new", 1, (0,), None, [])], schema
+        )),
+        "increment": lambda: store.increment(["k02", "k03"], "val", 5),
+        "patch": lambda: store.patch(["k04", "ghost"], inc),
+        "patch_each": lambda: store.patch_each([("k05", inc, None)]),
+        "delete": lambda: store.delete(["k06"]),
+        "uint32slice_push": lambda: store.uint32slice_push(["k07"], [42]),
+        "shift_matching": lambda: store.shift_matching(
+            Index(index_type=IndexType.KEY, order=IndexOrder.ASC),
+            Cmp("val", Op.GE, 8), how_many=2,
+        ),
+        "shift_expired": lambda: store.shift_expired(datetime(2021, 1, 1), 2),
+        "patch_expired": lambda: store.patch_expired(
+            datetime(2021, 1, 1), 2, lease=timedelta(minutes=5), ops=inc
+        ),
+    }
+    got = {}
+    for name, call in calls.items():
+        out = call()
+        assert store.compact() >= 1
+        got[name] = sorted(tuple(r)[:3] for r in out.collect())
+    assert ("k01", "UPDATED") in got["set"] and ("new", "NEW") in got["set"]
+    assert got["increment"] == [("k02", 2, 7), ("k03", 3, 8)]
+    assert got["patch"] == [("ghost", "KEY_NOT_FOUND"), ("k04", "PATCHED")]
+    assert got["patch_each"] == [(0, "k05", "PATCHED")]
+    assert got["delete"] == [("k06", True)]
+    assert got["uint32slice_push"] == [("k07", True)]
+    # val >= 8 after the set (k01 -> 99) and the increment (k03 -> 8)
+    assert [r[0] for r in got["shift_matching"]] == ["k01", "k03"]
+    assert [r[0] for r in got["shift_expired"]] == ["k00", "k09"]
+    assert [r[0] for r in got["patch_expired"]] == ["k12", "k15"]
+
+
+def test_keyed_commit_is_map_only_with_pinned_job_count(spark, tmp_path, monkeypatch):
+    """increment, patch and delete on the plain layout write the new
+    snapshot as one map-only projection over the state (no Exchange, no
+    join) and run a fixed number of Spark jobs per commit: one to
+    materialize the touched rows, one snapshot write, one event file."""
+    store = _commit_store(spark, tmp_path, "shape")
+    plans = []
+    write_version = store._write_version
+
+    def capture(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write_version(df)
+
+    monkeypatch.setattr(store, "_write_version", capture)
+    sc = spark.sparkContext
+    keys = [f"k{i:02d}" for i in range(0, 60, 7)] + ["ghost"]
+    commits = {
+        "increment": lambda: store.increment(keys, "val", 1, condition=Cmp("val", Op.LT, 8)),
+        "patch": lambda: store.patch(keys, [PatchOp(PatchKind.INC, "n", 1)]),
+        "delete": lambda: store.delete(keys),
+    }
+    for name, commit in commits.items():
+        sc.setJobGroup(f"commit-{name}", name)
+        try:
+            commit()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(f"commit-{name}")
+        assert len(jobs) == 3, (name, len(jobs))
+        plan = plans.pop()
+        assert "Exchange" not in plan and "Join" not in plan, (name, plan)

@@ -9,16 +9,19 @@ to the read-side families.
 What linear-ish b MEANS here: every mutation is copy-on-write — it
 rewrites one snapshot version of ONE swamp (reference model: a swamp is
 the small, per-entity storage unit, swamp.go; hydra shards millions of
-them). So O(state) per mutation is the expected shape, and the 100 TB
-argument is horizontal: 100 TB = many bounded swamps mutated
-independently, not one 100 TB swamp (SCALE.md §store). The stress
-checks there is no accidental O(n^2) (e.g. a status join that
-re-enumerates history, or claim ordering that global-sorts more than
-the claim window).
+them). A commit materializes its request-bounded touched rows once and
+writes the new version as one map-only projection over the old one
+(request keys as plan literals, no join or shuffle of the state), so
+the rewrite is the only O(state) term, and the 100 TB argument is
+horizontal: 100 TB = many bounded swamps mutated independently, not
+one 100 TB swamp (SCALE.md §store). The stress checks there is no
+accidental O(n^2) (e.g. a status join that re-enumerates history, or
+claim ordering that global-sorts more than the claim window).
 
 Two batch regimes per op where it makes sense:
 - fixed batch (1000 keys): the point-write pattern — b measures pure
-  state-size dependence (the version rewrite + the merge join).
+  state-size dependence (the map-only version rewrite plus one
+  literal-filtered scan for the touched rows).
 - proportional batch (10% of n): bulk ingest — b ~ 1 expected.
 
 Usage:
