@@ -14,17 +14,21 @@ collapses to per-partition single-writer batch semantics (SURVEY §3.2).
 Scale notes: key-list operators (increment, the patch batches) enter
 the key list into the plan as literals (``isin``, literal maps), so
 their targeted rows are a map-only filter over the state, bounded by
-the request. ``set_treasures`` is the one frame-keyed operator: an
-equi-join on the key; statuses are a projection of that same join.
+the request. ``set_treasures`` is the one frame-keyed operator: its
+request rows reach the state through a semi-join on the update keys
+(:func:`set_touched`), and only the whole-scope statuses add an
+anti-join for the untouched keys.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import timezone
 from enum import Enum
 from typing import Any, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import types as T
 
 from ..query.filters import Pred, translate
 
@@ -50,58 +54,62 @@ def set_treasures(
     with per-key status NEW / UPDATED / NOTHING_CHANGED / NOT_CREATED.
 
     Returns one row per key in (base ∪ updates) with the post-set value
-    columns plus ``set_status``. Value columns = all shared non-key
-    columns of the two frames; unchanged detection is a null-safe
-    column-wise comparison (the reference's changed-field detection,
-    swamp.go:2174-2176).
-    """
+    columns (all shared non-key columns) plus ``set_status``: the
+    request's rows (:func:`set_touched`) and NOTHING_CHANGED for every
+    base key the request misses (:func:`set_untouched`)."""
     value_cols = [c for c in updates.columns if c != key_col and c in base.columns]
-    b = base.select(key_col, *value_cols).alias("b")
-    u = updates.select(key_col, *value_cols).alias("u")
-    j = b.join(u, F.col(f"b.{key_col}") == F.col(f"u.{key_col}"), "full_outer")
-    key = F.coalesce(F.col(f"b.{key_col}"), F.col(f"u.{key_col}")).alias(key_col)
-    return j.select(key, *set_columns(
-        value_cols,
-        lambda c: F.col(f"b.{c}"),
-        lambda c: F.col(f"u.{c}"),
-        F.col(f"b.{key_col}").isNotNull(),
-        F.col(f"u.{key_col}").isNotNull(),
-        create_if_not_exist,
-        overwrite,
-    ))
+    touched = set_touched(base, updates, key_col, create_if_not_exist, overwrite)
+    return touched.select(key_col, *value_cols, "set_status").unionByName(
+        set_untouched(base, touched, key_col, value_cols)
+    )
 
 
-def set_columns(
-    value_cols: Sequence[str],
-    old,
-    new,
-    in_base: Column,
-    in_upd: Column,
+def set_touched(
+    base: DataFrame,
+    updates: DataFrame,
+    key_col: str = "key",
     create_if_not_exist: bool = True,
     overwrite: bool = True,
-) -> list[Column]:
-    """The Set projection over a row that pairs a base side with an
-    updates side: the post-set value columns plus ``set_status``.
-    ``old(c)``/``new(c)`` give each side's column ``c``."""
+) -> DataFrame:
+    """The request-bounded half of ``Set``: one row per update row with
+    the post-set value columns, ``set_status`` and the base row's values
+    as ``_old_<c>`` (null for a miss). The base is reached only through
+    a semi-join on the update keys, so the work is bounded by the
+    request (a broadcast when the updates are small). Unchanged
+    detection is a null-safe column-wise comparison (the reference's
+    changed-field detection, swamp.go:2174-2176)."""
+    value_cols = [c for c in updates.columns if c != key_col and c in base.columns]
+    hits = base.join(updates.select(key_col), key_col, "left_semi").select(
+        key_col, F.lit(True).alias("_hit"), *[F.col(c).alias(f"_old_{c}") for c in value_cols]
+    )
+    in_base = F.col("_hit").isNotNull()
     same = F.lit(True)
     for c in value_cols:
-        same = same & old(c).eqNullSafe(new(c))
-
-    take_update = (
-        (in_upd & ~in_base & F.lit(create_if_not_exist))
-        | (in_upd & in_base & F.lit(overwrite))
-    )
+        same = same & F.col(f"_old_{c}").eqNullSafe(F.col(c))
+    take_update = F.when(in_base, F.lit(overwrite)).otherwise(F.lit(create_if_not_exist))
     status = (
-        F.when(~in_upd, F.lit(STATUS_NOTHING_CHANGED))  # untouched existing row
-        .when(~in_base & F.lit(create_if_not_exist), F.lit(STATUS_NEW))
+        F.when(~in_base & F.lit(create_if_not_exist), F.lit(STATUS_NEW))
         .when(~in_base, F.lit(STATUS_NOT_CREATED))  # update-only miss
         .when(~F.lit(overwrite), F.lit(STATUS_NOT_CREATED))  # insert-only hit
         .when(same, F.lit(STATUS_NOTHING_CHANGED))
         .otherwise(F.lit(STATUS_UPDATED))
     )
-    return [
-        F.when(take_update, new(c)).otherwise(old(c)).alias(c) for c in value_cols
-    ] + [status.alias("set_status")]
+    return updates.select(key_col, *value_cols).join(hits, key_col, "left").select(
+        key_col,
+        *[F.when(take_update, F.col(c)).otherwise(F.col(f"_old_{c}")).alias(c) for c in value_cols],
+        status.alias("set_status"),
+        *[f"_old_{c}" for c in value_cols],
+    )
+
+
+def set_untouched(
+    frame: DataFrame, touched: DataFrame, key_col: str = "key", value_cols: Sequence[str] = ()
+) -> DataFrame:
+    """NOTHING_CHANGED status rows for the keys of ``frame`` that the
+    ``Set`` request (``touched``) does not name."""
+    return frame.join(touched.select(key_col), key_col, "left_anti").select(
+        key_col, *value_cols, F.lit(STATUS_NOTHING_CHANGED).alias("set_status")
+    )
 
 
 def delete_treasures(
@@ -269,20 +277,42 @@ def increment_columns(
 
 
 def literal_frame(spark, rows: Sequence[tuple], schema) -> DataFrame:
-    """Request-sized rows as a LocalRelation (via pandas/Arrow): reading
-    it runs no Spark job and no Python worker, unlike a
-    ``createDataFrame(list)`` frame."""
+    """Request-sized rows, as ``collect()`` returns them, as a
+    LocalRelation (via pandas/Arrow): reading it runs no Spark job and
+    no Python worker, unlike a ``createDataFrame(list)`` frame, and it
+    depends on no snapshot file."""
     import pandas as pd
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
 
     if isinstance(schema, str):
         schema = _parse_datatype_string(schema)
+    if not rows:  # an empty pandas frame would take the Python-RDD path
+        return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
+    rows = [_aware(r, schema) for r in rows]
     # object columns: no int -> float widening around a None
     pdf = pd.DataFrame({
         name: pd.Series([r[i] for r in rows], dtype=object)
         for i, name in enumerate(schema.fieldNames())
     })
     return spark.createDataFrame(pdf, schema)
+
+
+def _aware(value, dtype):
+    """``collect()`` returns timestamps as naive local-time datetimes;
+    make them aware, or the conversion back reads them in the session
+    time zone."""
+    if value is None:
+        return None
+    if isinstance(dtype, T.TimestampType):
+        return value.astimezone(timezone.utc)
+    if isinstance(dtype, T.StructType):
+        return tuple(_aware(v, f.dataType) for v, f in zip(value, dtype.fields))
+    if isinstance(dtype, T.ArrayType):
+        return [_aware(v, dtype.elementType) for v in value]
+    if isinstance(dtype, T.MapType):
+        return {_aware(k, dtype.keyType): _aware(v, dtype.valueType) for k, v in value.items()}
+    return value
 
 
 # ---------------------------------------------------------------------------
@@ -516,7 +546,6 @@ def patch_treasures_batch(
     over ``base`` (targeted, uncapped keys as literals) plus the created
     rows — no join against the state.
     """
-    from pyspark.sql import types as T
     from pyspark.sql.window import Window
 
     keys = list(dict.fromkeys(keys))

@@ -9,11 +9,14 @@ Maps the reference's per-swamp storage + reactivity model (SURVEY.md
   produces v=N+1 (the Spark reading of the reference's append-only
   chronicle + compaction: every snapshot is already compact).
 - **commit shape**: a write materializes its request-bounded touched
-  rows once (a literal key filter, or the claim's top-k) and holds them
-  until the next transaction; it writes v=N+1 as one map-only projection
-  over v=N with the request keys as plan literals (a DataFrame ``set``
-  broadcast-joins its cached request instead); its event file and reply
-  come from the touched rows, so the reply survives a ``compact()``.
+  rows once (a keyed write caches a literal key filter and holds it
+  until the next transaction; a claim collects its top-k); it writes
+  v=N+1 as one map-only projection over v=N with the request keys as
+  plan literals (a DataFrame ``set`` broadcast-joins its cached request
+  instead); its event file and reply come from the touched rows. Claim,
+  ``increment``, ``delete`` and ``uint32slice_*`` replies are literal
+  frames, readable for good; ``set``, ``patch`` and ``patch_each``
+  replies read the held rows, so collect them before the next call.
 - **changes** append to ``root/changes/`` as parquet batches with the
   reference's event shape (proto:755-784): op NEW/UPDATED/DELETED, key,
   old/new row payloads (JSON-encoded, schema-agnostic), event_time, and
@@ -54,18 +57,18 @@ version dir a kept manifest still references.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
+import shutil
+import threading
 import time
 from datetime import datetime, timezone
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
-
-import functools
-import threading
 
 from ..operators import claims as claims_ops
 from ..operators import mutate as mutate_ops
@@ -246,8 +249,6 @@ class TreasureStore:
         - log missing, ``.old`` present → roll back (restore it).
         - leftovers after the log exists are stale; discard them.
         """
-        import shutil
-
         tmp = self.changes_dir + ".compacting"
         old = self.changes_dir + ".old"
         if not os.path.exists(self.changes_dir):
@@ -384,14 +385,12 @@ class TreasureStore:
         fill the added columns with NULL — the unionByName
         (allowMissingColumns) semantics the layout needs. Falls back
         to the init seed for pre-schema versions."""
-        from pyspark.sql import types as _T
-
         cache = self._schema_cache
         if v not in cache:
             sp = os.path.join(self._snapshot_path(v), "_SCHEMA")
             try:
                 with open(sp) as fh:
-                    cache[v] = _T.StructType.fromJson(json.load(fh))
+                    cache[v] = T.StructType.fromJson(json.load(fh))
             except (OSError, ValueError, KeyError):
                 cache[v] = self.spark.read.parquet(
                     os.path.join(self.root, "_schema")
@@ -670,8 +669,6 @@ class TreasureStore:
         whole store — every snapshot version and the change log. The
         parquet analogue of deleting the swamp's `.hyd` file; bulk = a
         loop over stores (each destroy is independent, no coordination)."""
-        import shutil
-
         shutil.rmtree(self.root, ignore_errors=True)
         self._schema_cache.clear()
 
@@ -693,8 +690,6 @@ class TreasureStore:
         a donor dereferenced by later commits is reclaimed by the next
         compact even though it stopped being a listed version. Reclaim
         is per-version-dir, like Iceberg snapshot expiry."""
-        import shutil
-
         vs = self._versions()
         drop = vs[:-keep_versions] if keep_versions > 0 else vs
         demoted = 0
@@ -755,8 +750,6 @@ class TreasureStore:
         processed the old files would see the rewritten file as new
         input and re-deliver. At 100 TB the log is time-partitioned
         and this is a partition-range delete."""
-        import shutil
-
         self._recover_changes()
         ev = self.changes().cache()
         total = ev.count()
@@ -937,8 +930,6 @@ class TreasureStore:
         """Move the staged commit file into the live log under its
         range-encoded name (single batch: lo == hi == batch_id). Shared
         by ``_emit`` and the staging-crash recovery."""
-        import shutil
-
         parts = [
             n
             for n in os.listdir(staging)
@@ -982,7 +973,8 @@ class TreasureStore:
         overwrite: bool = True,
     ) -> DataFrame:
         """Reference ``Set``: merge + per-key statuses + change events
-        (NEW/UPDATED; NOTHING_CHANGED emits nothing).
+        (NEW/UPDATED; NOTHING_CHANGED emits nothing). An update column
+        the state lacks raises ``ValueError`` before anything is written.
 
         Returned statuses cover every key of the TRANSACTION'S READ
         SCOPE: the whole store on the plain layout, the touched
@@ -994,53 +986,36 @@ class TreasureStore:
 
         The request frame is cached once, so its measured size picks a
         broadcast under ``autoBroadcastJoinThreshold``; a bulk frame is
-        never collected."""
+        never collected. The request's rows
+        (:func:`operators.mutate.set_touched`) are cached once too and
+        back the returned statuses until the store's next transaction
+        releases them: collect the statuses before the next call."""
         key = self.key_col
         level = updates.storageLevel
         owned = not (level.useMemory or level.useDisk)
         upd = updates.cache()
         try:
             self._scope_to(upd)  # bucketed: the bucket collect fills it
+            base = self.current()
+            extra = [c for c in upd.columns if c not in base.columns]
+            if extra:
+                raise ValueError(f"set: columns {extra} are not in the store's state")
             if self.n_buckets is None:
                 upd.write.format("noop").mode("overwrite").save()
-            base = self.current()
-            vals = [c for c in upd.columns if c != key and c in base.columns]
-            hits = base.join(upd.select(key), key, "left_semi").select(
-                key,
-                F.lit(True).alias("_in_base"),
-                *[F.col(c).alias(f"_old_{c}") for c in vals],
-            )
-            in_base = F.col("_in_base").isNotNull()
-            touched = self._hold(
-                upd.select(key, *vals).join(hits, key, "left").select(
-                    key,
-                    *mutate_ops.set_columns(
-                        vals, lambda c: F.col(f"_old_{c}"), F.col, in_base,
-                        F.lit(True), create_if_not_exist, overwrite,
-                    ),
-                    in_base.alias("_in_base"),
-                    F.when(in_base, F.to_json(F.struct(
-                        *[F.col(f"_old_{c}").alias(c) for c in vals]
-                    ))).alias("_old"),
-                )
-            )
+            vals = [c for c in upd.columns if c != key]
+            touched = self._hold(mutate_ops.set_touched(
+                base, upd, key, create_if_not_exist, overwrite
+            ))
             # fill it once, before the write plan reads it twice
             touched.write.format("noop").mode("overwrite").save()
-            new_state = base.select(key, *vals)
             status = F.col("set_status")
-            if overwrite:
-                changed = touched.filter(
-                    status == mutate_ops.STATUS_UPDATED
-                ).select(key, F.lit(True).alias("_upd"), *[
-                    F.col(c).alias(f"_new_{c}") for c in vals
-                ])
-                new_state = new_state.join(changed, key, "left").select(key, *[
-                    F.when(F.col("_upd"), F.col(f"_new_{c}")).otherwise(F.col(c)).alias(c)
-                    for c in vals
-                ])
-            new_state = new_state.unionByName(
-                touched.filter(status == mutate_ops.STATUS_NEW).select(key, *vals)
+            changed = touched.filter(status == mutate_ops.STATUS_UPDATED).select(
+                key, F.lit(True).alias("_upd"), *[F.col(c).alias(f"_new_{c}") for c in vals]
             )
+            new_state = base.select(key, *vals).join(changed, key, "left").select(key, *[
+                F.when(F.col("_upd"), F.col(f"_new_{c}")).otherwise(F.col(c)).alias(c)
+                for c in vals
+            ]).unionByName(touched.filter(status == mutate_ops.STATUS_NEW).select(key, *vals))
             scope = self._scope
             batch = self._write_version(new_state)
         finally:
@@ -1049,17 +1024,18 @@ class TreasureStore:
         events = touched.filter(
             status.isin(mutate_ops.STATUS_NEW, mutate_ops.STATUS_UPDATED)
         )
-        old = F.when(status == mutate_ops.STATUS_UPDATED, F.col("_old"))
+        old = F.when(status == mutate_ops.STATUS_UPDATED, F.to_json(F.struct(
+            *[F.col(f"_old_{c}").alias(c) for c in vals]
+        )))
         self._emit(self._events(events, status, vals, old), batch)
         written = (
             self._bucketed_read(batch, buckets=scope)
             if self.n_buckets is not None
             else self._plain_read(batch)
         )
-        untouched = written.join(touched.select(key), key, "left_anti").select(
-            key, F.lit(mutate_ops.STATUS_NOTHING_CHANGED).alias("set_status")
+        return touched.select(key, "set_status").unionByName(
+            mutate_ops.set_untouched(written, touched, key)
         )
-        return touched.select(key, "set_status").unionByName(untouched)
 
     @_serialized
     def delete(self, keys: Sequence[str]) -> DataFrame:
@@ -1159,9 +1135,7 @@ class TreasureStore:
             events = events.unionByName(self._events(created, "NEW", value_cols))
         batch = self._write_version(new_state)
         self._emit(events, batch)
-        if not create_if_not_exist:
-            return results.filter(~F.col("created"))
-        return results
+        return results if create_if_not_exist else results.filter(~F.col("created"))
 
     def uint32slice_push(self, keys: Sequence[str], values: Sequence[int], ids_col: str = "ids") -> DataFrame:
         """Reference ``Uint32SlicePush`` (proto:378-396) as one
@@ -1204,11 +1178,14 @@ class TreasureStore:
         return mutate_ops.literal_frame(self.spark, rows, reply.schema)
 
     def _claim(self, base: DataFrame, claimed: DataFrame) -> DataFrame:
-        """Commit a claim: materialize the claimed rows once, drop their
-        keys from the state as literals, emit DELETED events."""
+        """Commit a claim: collect the claimed rows once (at most
+        ``how_many``), drop their keys from the state as literals, emit
+        DELETED events. The rows return as a literal frame, readable
+        whatever the store does next."""
         value_cols = [c for c in base.columns if c != self.key_col]
-        claimed = self._hold(claimed)
-        keys = [r[0] for r in claimed.select(self.key_col).collect()]
+        rows = claimed.collect()
+        claimed = mutate_ops.literal_frame(self.spark, rows, claimed.schema)
+        keys = [r[self.key_col] for r in rows]
         self._scope_to(keys)  # write-prune: only claimed buckets
         remaining, _ = mutate_ops.delete_treasures(base, keys, self.key_col)
         batch = self._write_version(remaining)
@@ -1290,7 +1267,8 @@ class TreasureStore:
         The pure transformation lives in
         :func:`operators.mutate.patch_treasures_batch` (oracle-gated by
         the ``patch_cap_budget`` golden query); this wrapper adds the
-        serialized persist + event emission."""
+        serialized persist + event emission. The statuses read the held
+        rows until the store's next transaction: collect them first."""
         if cap is None:
             # a capped patch pre-counts the WHOLE swamp (proto:3023) —
             # its base read must stay unscoped; without a cap the
@@ -1354,7 +1332,9 @@ class TreasureStore:
 
         The pure transformation (plan shape, cap probes, scale notes)
         lives in :func:`operators.mutate.patch_each_batch`; this
-        wrapper adds the serialized persist + event emission."""
+        wrapper adds the serialized persist + event emission. The
+        statuses read the held rows until the store's next transaction:
+        collect them first."""
         # the proto shape allows an empty Patches list — no-op: no new
         # version, no events, an empty result frame
         if not patches:
@@ -1396,22 +1376,24 @@ class TreasureStore:
         cap: Optional[claims_ops.Cap] = None,
     ) -> DataFrame:
         """Reference ``PatchExpiredTreasures`` as one serialized
-        transaction: the leased rows are materialized once, dropped from
-        the state by literal key and re-inserted patched; UPDATED events
-        for the PATCHED rows."""
+        transaction: the leased rows are collected once (at most
+        ``how_many``), dropped from the state by literal key and
+        re-inserted patched; UPDATED events for the PATCHED rows. The
+        rows return as a literal frame, readable whatever the store does
+        next."""
         key = self.key_col
         base = self.current()
         value_cols = [c for c in base.columns if c != key]
         results, _ = claims_ops.patch_expired(
             base, now, how_many, lease, ops, condition, cap, key_col=key
         )
-        results = self._hold(results)
+        rows = results.collect()
+        results = mutate_ops.literal_frame(self.spark, rows, results.schema)
         status = F.col("patch_status")
-        selected = results.select(key, status).collect()
         self._scope_to(  # write-prune: only re-leased buckets
-            [r[0] for r in selected if r[1] == mutate_ops.STATUS_PATCHED]
+            [r[key] for r in rows if r["patch_status"] == mutate_ops.STATUS_PATCHED]
         )
-        remaining, _ = mutate_ops.delete_treasures(base, [r[0] for r in selected], key)
+        remaining, _ = mutate_ops.delete_treasures(base, [r[key] for r in rows], key)
         batch = self._write_version(remaining.unionByName(results.drop("patch_status")))
         patched = results.filter(status == mutate_ops.STATUS_PATCHED)
         self._emit(self._events(patched, "UPDATED", value_cols), batch)
@@ -1429,7 +1411,10 @@ class TreasureStore:
 # null-filled. how_many/caps apply PER SWAMP, as in the proto.
 
 
-def _union_tagged(frames: "list[DataFrame]") -> DataFrame:
+def _fan_out(stores: "dict[str, TreasureStore]", call) -> DataFrame:
+    """``call(store)`` per store, each under its own transaction, with
+    the results tagged by swamp name and unioned."""
+    frames = [call(store).withColumn("swamp", F.lit(name)) for name, store in stores.items()]
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f, allowMissingColumns=True)
@@ -1441,12 +1426,7 @@ def shift_expired_many(
 ) -> DataFrame:
     """``ShiftExpiredTreasuresMany``: per-store TTL-queue pop; claimed
     rows tagged with their swamp name."""
-    return _union_tagged(
-        [
-            store.shift_expired(now, how_many).withColumn("swamp", F.lit(name))
-            for name, store in stores.items()
-        ]
-    )
+    return _fan_out(stores, lambda s: s.shift_expired(now, how_many))
 
 
 def shift_matching_many(
@@ -1457,14 +1437,7 @@ def shift_matching_many(
     cap: Optional[claims_ops.Cap] = None,
 ) -> DataFrame:
     """``ShiftMatchingTreasuresMany``: per-store parametric claim."""
-    return _union_tagged(
-        [
-            store.shift_matching(index, filt, how_many, cap).withColumn(
-                "swamp", F.lit(name)
-            )
-            for name, store in stores.items()
-        ]
-    )
+    return _fan_out(stores, lambda s: s.shift_matching(index, filt, how_many, cap))
 
 
 def patch_expired_many(
@@ -1477,11 +1450,6 @@ def patch_expired_many(
     cap: Optional[claims_ops.Cap] = None,
 ) -> DataFrame:
     """``PatchExpiredTreasuresMany``: per-store lease-claim + patch."""
-    return _union_tagged(
-        [
-            store.patch_expired(
-                now, how_many, lease, ops, condition, cap
-            ).withColumn("swamp", F.lit(name))
-            for name, store in stores.items()
-        ]
+    return _fan_out(
+        stores, lambda s: s.patch_expired(now, how_many, lease, ops, condition, cap)
     )

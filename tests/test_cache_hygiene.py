@@ -123,9 +123,10 @@ def test_pin_latest_never_evicts_plan_shared_entries(spark):
 
 
 def test_store_commits_leave_cache_footprint_flat(spark, tmp_path):
-    """A TreasureStore commit caches its touched rows once and the next
-    commit releases them, so N mixed commits leave the CacheManager
-    where the first one left it: at most one entry per store."""
+    """A TreasureStore commit caches its touched rows at most once and
+    the next commit releases them (claims cache nothing), so no commit
+    leaves more than one entry per store and N mixed commits leave the
+    CacheManager where the first one left it."""
     from datetime import datetime, timedelta
 
     from hydraide_spark.operators.mutate import PatchKind, PatchOp
@@ -167,4 +168,6 @@ def test_store_commits_leave_cache_footprint_flat(spark, tmp_path):
     for i in range(2):
         for commit in commits(i):
             commit().collect()
+            assert _n_cached(spark) <= after_one
+    store.increment(["k001"], "val", 1).collect()
     assert _n_cached(spark) == after_one

@@ -83,6 +83,42 @@ def test_insert_only_and_update_only(spark, tmp_path):
     assert "y" not in {r["key"] for r in store.current().collect()}
 
 
+def test_set_rejects_a_column_the_state_lacks(spark, tmp_path):
+    """An update column the state lacks fails the Set before anything
+    is written: no new version, no event, the state as it was."""
+    store = make_store(spark, tmp_path, BASE)
+    v = store.version
+    updates = spark.createDataFrame(
+        [("a", 10, None, "x")], "key string, val long, expired_at timestamp, extra string"
+    )
+    with pytest.raises(ValueError, match="extra"):
+        store.set(updates)
+    assert store.version == v
+    assert store.changes().count() == 0
+    assert sorted(tuple(r) for r in store.current().collect()) == sorted(map(tuple, BASE))
+
+
+@pytest.mark.parametrize("create,overwrite", [(True, True), (True, False), (False, True)])
+def test_store_set_is_the_pure_set(spark, tmp_path, create, overwrite):
+    """store.set runs the request-bounded half of the oracle-gated
+    set_treasures (mutate.set_touched): over the same snapshot its
+    statuses equal the operator's, and the new state holds the
+    operator's rows minus the refused update-only misses."""
+    from hydraide_spark.operators.mutate import set_treasures
+
+    store = make_store(spark, tmp_path, BASE)
+    updates = spark.createDataFrame(
+        [("a", 10, datetime(2020, 1, 1)), ("b", 2, datetime(2020, 1, 2)), ("d", 4, None)],
+        "key string, val long, expired_at timestamp",
+    )
+    want = set_treasures(store.current(), updates, "key", create, overwrite).collect()
+    got = store.set(updates, create, overwrite).collect()
+    assert sorted(map(tuple, got)) == sorted((r["key"], r["set_status"]) for r in want)
+    assert sorted(tuple(r) for r in store.current().collect()) == sorted(
+        tuple(r)[:3] for r in want if r["key"] in "abc" or r["set_status"] == "NEW"
+    )
+
+
 def test_set_carries_per_key_metadata_columns(spark, tmp_path):
     """SetRequest's KeyValuePair carries optional per-key metadata
     (CreatedAt/CreatedBy/UpdatedAt/UpdatedBy/ExpiredAt, proto:983-999):
@@ -2597,3 +2633,61 @@ def test_keyed_commit_is_map_only_with_pinned_job_count(spark, tmp_path, monkeyp
         assert len(jobs) == 3, (name, len(jobs))
         plan = plans.pop()
         assert "Exchange" not in plan and "Join" not in plan, (name, plan)
+
+
+def test_claim_replies_outlive_later_commits_and_compact(spark, tmp_path):
+    """Claim replies are literal frames: later commits and a compact()
+    that drops the snapshot the claim read leave them readable; a claim
+    that finds nothing replies with an empty frame."""
+    from hydraide_spark.query.index import Index, IndexOrder, IndexType
+
+    store = _commit_store(spark, tmp_path, "claims")
+    replies = {
+        "shift_matching": store.shift_matching(
+            Index(index_type=IndexType.KEY, order=IndexOrder.ASC),
+            Cmp("val", Op.GE, 8), how_many=2,
+        ),
+        "shift_expired": store.shift_expired(datetime(2021, 1, 1), 2),
+        "patch_expired": store.patch_expired(
+            datetime(2021, 1, 1), 2, lease=timedelta(minutes=5),
+            ops=[PatchOp(PatchKind.INC, "n", 1)],
+        ),
+        "nothing": store.shift_expired(datetime(2019, 1, 1), 2),
+    }
+    store.increment(["k01"], "val", 1)
+    store.delete(["k02"])
+    assert store.compact() >= 1
+    got = {name: sorted(tuple(r) for r in out.collect()) for name, out in replies.items()}
+    assert [r[0] for r in got["shift_matching"]] == ["k08", "k09"]
+    assert [r[0] for r in got["shift_expired"]] == ["k00", "k03"]
+    assert [(r[0], r[2], r[3]) for r in got["patch_expired"]] == [
+        ("k06", (3,), datetime(2021, 1, 1, 0, 5)),
+        ("k12", (1,), datetime(2021, 1, 1, 0, 5)),
+    ]
+    assert got["nothing"] == []
+
+
+def test_literal_frame_keeps_timestamps_in_any_local_zone(spark, monkeypatch):
+    """collect() hands back local-time datetimes; a literal frame built
+    from them keeps the instants whatever the process's time zone,
+    nested ones included."""
+    import time
+
+    from hydraide_spark.operators.mutate import literal_frame
+
+    df = spark.sql(
+        "SELECT 'k' AS key, TIMESTAMP'2024-01-01 10:00:00' AS t,"
+        " named_struct('t', TIMESTAMP'2024-11-03 05:30:00') AS s,"
+        " array(TIMESTAMP'2024-03-10 07:30:00') AS a,"
+        " map('m', TIMESTAMP'2024-06-01 00:00:00') AS m"
+    )
+    as_text = ["cast(t as string)", "cast(s as string)", "cast(a as string)", "cast(m as string)"]
+    want = df.selectExpr(*as_text).collect()
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        got = literal_frame(spark, df.collect(), df.schema).selectExpr(*as_text).collect()
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert got == want
